@@ -1976,7 +1976,7 @@ def _oracle_trail_traffic() -> str:
 # A 160x160 grid of 3-vertex polylines (25,600 > Layer.MAX_CLOSURE_GEOMS
 # = 20,000) over a 10x10-degree window: the layer CANNOT ship in task
 # closures, so map_match refines through the distributed blob-join tier
-# (spatial_join._geoms_for_join + batch-local grouping) — the
+# (spatial_join._refine_by_region: blob join + batch-local grouping) — the
 # EdgeQuery-has-no-index-ceiling contract (s2/edge_query.go:177-763).
 _BN_G = 160  # grid side
 _BN_PITCH = 0.0625  # 10 deg / 160, exact in binary

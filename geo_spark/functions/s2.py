@@ -96,21 +96,6 @@ def s2_edge_neighbors(cid: pd.Series) -> pd.Series:
     return pd.Series(list(nbrs))
 
 
-def s2_all_neighbors_udf(lvl: int):
-    """Factory: array<long> UDF of all neighbors at a fixed level
-    (kNN ring expansion); s2/cellid.go:274-321."""
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _all_neighbors(cid: pd.Series) -> pd.Series:
-        vals = cid.to_numpy(dtype=np.int64, na_value=0)
-        out = []
-        for v in ck.from_signed(vals):
-            out.append(ck.to_signed(ck.all_neighbors(int(v), lvl)))
-        return pd.Series(out)
-
-    return _all_neighbors
-
-
 @pandas_udf(
     T.StructType(
         [

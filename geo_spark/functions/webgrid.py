@@ -96,11 +96,6 @@ def geohash_col(lat: Column, lng: Column, precision: int) -> Column:
     return _chars(geohash_code_col(lat, lng, precision), precision, 5, GEOHASH_BASE32)
 
 
-def geohash_prefix(gh: Column, precision: int) -> Column:
-    """Coarser ancestor geohash: prefix truncation (prefix = containment)."""
-    return F.substring(gh, 1, precision)
-
-
 # ---------------------------------------------------------------------------
 # Web-Mercator XYZ tiles + quadkey
 # ---------------------------------------------------------------------------
@@ -142,11 +137,6 @@ def quadkey_from_latlng(lat: Column, lng: Column, zoom: int) -> Column:
     """lat/lng -> Bing quadkey in one codegen'd projection."""
     x, y = mercator_xy_cols(lat, lng, zoom)
     return quadkey_col(x, y, zoom)
-
-
-def tile_parent_cols(x: Column, y: Column, levels: int = 1) -> tuple[Column, Column]:
-    """Quadtree parent tile `levels` zooms up."""
-    return F.shiftright(x, levels), F.shiftright(y, levels)
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,6 @@ NUM_FACES = 6
 MAX_LEVEL = 30
 POS_BITS = 2 * MAX_LEVEL + 1  # 61
 MAX_SIZE = 1 << MAX_LEVEL  # 2^30
-MAX_SITI = MAX_SIZE << 1
 
 LOOKUP_BITS = 4
 SWAP_MASK = 0x01
@@ -146,12 +145,6 @@ def st_to_ij(s: np.ndarray) -> np.ndarray:
 def ij_to_st_min(i: np.ndarray) -> np.ndarray:
     """Leaf index -> minimum s/t of that cell, s2/stuv.go:221-223."""
     return np.asarray(i, dtype=np.float64) / float(MAX_SIZE)
-
-
-def siti_to_st(si: np.ndarray) -> np.ndarray:
-    """si/ti -> s/t, capped at 1.0, s2/stuv.go:163-169."""
-    si = np.asarray(si, dtype=np.float64)
-    return np.minimum(si / float(MAX_SITI), 1.0)
 
 
 # ---------------------------------------------------------------------------

@@ -74,10 +74,6 @@ def meters_to_radians(m: float) -> float:
     return m / EARTH_RADIUS_M
 
 
-def radians_to_meters(rad: float) -> float:
-    return rad * EARTH_RADIUS_M
-
-
 def level_for_meters(m: float) -> int:
     """Closest level whose min cell width matches a ground distance."""
     return MIN_WIDTH.max_level(meters_to_radians(m))

@@ -56,12 +56,6 @@ def norm2(a: np.ndarray) -> np.ndarray:
     return dot(a, a)
 
 
-def simple_sign(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """(c x a) . b > 0 — Sign, s2/predicates.go:140-152 (the (C x A).B form
-    guarantees !Sign(c,b,a) when Sign(a,b,c))."""
-    return dot(cross(c, a), b) > 0
-
-
 def triage_sign(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     """Fast sign with proven error bound; 0 = indeterminate.
     s2/predicates.go:243-252."""

@@ -183,10 +183,6 @@ def _siti_to_piqi(siti: int, level: int) -> int:
     return s >> (_MAX_LEVEL + 1 - level)
 
 
-def _piqi_to_st(pi: int, level: int) -> float:
-    return (pi + 0.5) / float(1 << level)
-
-
 def encode_points_compressed(points: np.ndarray, level: int) -> bytes:
     """Compress an (N,3) array of unit vectors assumed to be (mostly)
     centers of level-``level`` cells; lossless for any input (non-center

@@ -32,13 +32,11 @@ integers, so distributed summation order cannot perturb the result and
 a relational replay (DuckDB) reproduces it bit for bit when the input
 coordinates are pure-double streams.
 
-Scale shape: candidates are a hash equi-join on covering terms;
-geometries ship in the closure (both layers are dimension tables —
-the >MAX_CLOSURE_GEOMS blob-join tier of spatial_join._refine applies
-unchanged if a corpus-sized trail side is needed: join the trail
-vertex blobs to candidate pairs and run the same per-pair kernel
-batch-locally); the refine emits one row per overlapping pair, never
-per segment.
+Scale shape: candidates are a hash equi-join on covering terms; the
+trail geometries reach the refine through spatial_join's one refine
+path (closure, or blobs joined onto the candidate pairs above
+Layer.MAX_CLOSURE_GEOMS); the refine emits one row per overlapping
+pair, never per segment.
 """
 
 from __future__ import annotations
@@ -51,7 +49,7 @@ from pyspark.sql import DataFrame
 
 from geo_spark.kernel.regions import LoopRegion, PolygonRegion, PolylineRegion
 from geo_spark.operators.geom_join import _pair_candidates
-from geo_spark.operators.spatial_join import Layer
+from geo_spark.operators.spatial_join import Layer, _refine_by_region
 
 DEFAULT_QUANTUM = 1.0e12
 
@@ -205,16 +203,13 @@ def clip_length_join(
     are conservative) and pairs refining to zero are dropped, so the
     output is exactly the overlapping pairs.
 
-    Tiers: with a closure-size trail layer the refine is a
-    shuffle-free mapInPandas over candidate pairs.  A corpus-sized
-    trail side (``a.regions is None``, > Layer.MAX_CLOSURE_GEOMS)
-    takes the BLOB-JOIN tier instead — candidate pairs equi-join the
-    trail blob table on aid and the same per-pair kernel runs
-    batch-locally with an LRU-ish unpickle cache (the
-    spatial_join._refine fallback pattern; no per-geometry keyed
-    shuffle, no geometry ever grouped to one task).  The REGION side
-    stays a closure dimension table — admin/zone layers are
-    thousands, not billions."""
+    The trail side takes the covering join's one refine path
+    (spatial_join._refine_by_region, keyed by aid): a closure-size
+    trail layer ships in the closure; a corpus-sized one
+    (> Layer.MAX_CLOSURE_GEOMS) gets its blobs joined onto the
+    candidate pairs, and the same per-pair kernel runs batch-locally.
+    The REGION side stays a closure dimension table — admin/zone
+    layers are thousands, not billions."""
     if b.regions is None:
         raise ValueError(
             "clip_length_join: region side must be a closure-size "
@@ -239,47 +234,16 @@ def clip_length_join(
                   "inside_rad": "float64"}
         kern = clip_arc_length
 
-    if a.regions is not None:
-        a_regions = a.regions
+    def clip(pdf, inv, regs):
+        rows = []
+        aids = pdf["aid"].to_numpy()
+        for r, bid in enumerate(pdf["bid"].to_numpy()):
+            tr = regs[inv[r]]
+            lp = b_regions[int(bid)]
+            _check_types(tr, lp)
+            n_cross, q = kern(tr.verts, lp)
+            if n_cross or q:
+                rows.append((int(aids[r]), int(bid), n_cross, q))
+        return pd.DataFrame(rows, columns=cols).astype(dtypes)
 
-        def fn(batches):
-            for pdf in batches:
-                rows = []
-                for aid, bid in zip(
-                    pdf["aid"].to_numpy(), pdf["bid"].to_numpy()
-                ):
-                    tr = a_regions[int(aid)]
-                    lp = b_regions[int(bid)]
-                    _check_types(tr, lp)
-                    n_cross, q = kern(tr.verts, lp)
-                    if n_cross or q:
-                        rows.append((int(aid), int(bid), n_cross, q))
-                yield pd.DataFrame(rows, columns=cols).astype(dtypes)
-
-        return cands.mapInPandas(fn, out_schema)
-
-    # distributed tier: trail geometries ride the rows, not the closure
-    from pyspark.sql import functions as F
-
-    from geo_spark.operators.spatial_join import _cached_region
-
-    joined = cands.join(
-        a.geoms.select(F.col("geom_id").alias("aid"), "blob"), "aid"
-    )
-
-    def fn_blob(batches):
-        cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for aid, bid, blob in zip(
-                pdf["aid"].to_numpy(), pdf["bid"].to_numpy(), pdf["blob"]
-            ):
-                tr = _cached_region(cache, int(aid), blob)
-                lp = b_regions[int(bid)]
-                _check_types(tr, lp)
-                n_cross, q = kern(tr.verts, lp)
-                if n_cross or q:
-                    rows.append((int(aid), int(bid), n_cross, q))
-            yield pd.DataFrame(rows, columns=cols).astype(dtypes)
-
-    return joined.mapInPandas(fn_blob, out_schema)
+    return _refine_by_region(cands, a, clip, out_schema, id_col="aid")

@@ -13,7 +13,6 @@ from pyspark.sql import types as T
 
 from geo_spark.kernel import measures as M
 from geo_spark.kernel.booleans import loop_boolean
-from geo_spark.kernel.buffer import buffer_loop
 
 
 @F.pandas_udf(
@@ -44,28 +43,6 @@ def boolean_area_udf(
         n_out.append(len(loops))
         area_out.append(abs(area))
     return pd.DataFrame({"n_loops": pd.Series(n_out, dtype="int32"), "area": area_out})
-
-
-@F.pandas_udf(T.ArrayType(T.ArrayType(T.DoubleType())))
-def buffer_loop_udf(verts: pd.Series, radius: pd.Series) -> pd.Series:
-    out = []
-    for v, r in zip(verts, radius):
-        buf = buffer_loop(np.array(list(v), dtype=np.float64), float(r))
-        out.append([[float(c) for c in p] for p in buf])
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))))
-def buffer_loop_rings_udf(verts: pd.Series, radius: pd.Series) -> pd.Series:
-    """Concavity-safe buffering: list of boundary rings per input loop
-    (XOR-parity convention; kernel/buffer.buffer_loop_rings)."""
-    from geo_spark.kernel.buffer import buffer_loop_rings
-
-    out = []
-    for v, r in zip(verts, radius):
-        rings = buffer_loop_rings(np.array(list(v), dtype=np.float64), float(r))
-        out.append([[[float(c) for c in p] for p in ring] for ring in rings])
-    return pd.Series(out)
 
 
 def boolean_areas(pairs: DataFrame) -> DataFrame:

@@ -368,30 +368,6 @@ def contamination_score(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 8,
-    num_hashes: int = 64,
-    key: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(key, sig array<long>) — minimum of seeded splitmix64 rehashes of
-    the shingle set, one Arrow batch at a time."""
-    seeds = _splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            h = _shingle_hashes(t or "", n)  # (S,)
-            # rehash per seed: splitmix(shingle ^ seed), min over shingles
-            m = _splitmix64(h[:, None] ^ seeds[None, :]).min(axis=0)
-            out.append(m.view(np.int64).tolist())
-        return pd.Series(out)
-
-    return docs.select(F.col(key), sig(F.col(text_col)).alias("sig"))
-
-
 def _fused_sig_sets(
     docs: DataFrame,
     n: int,
@@ -610,20 +586,6 @@ def incremental_minhash_pairs(
     )
     sets_small = sets_all.join(F.broadcast(needed), key)
     return _exact_jaccard_rerank(cands, sets_small, key, threshold)
-
-
-def shingle_hash_sets(
-    docs: DataFrame, n: int = 8, key: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(key, sh array<long>): sorted distinct shingle hashes per doc."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sh(text: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_shingle_hashes(t or "", n).view(np.int64).tolist() for t in text]
-        )
-
-    return docs.select(F.col(key), sh(F.col(text_col)).alias("sh"))
 
 
 def simhash64(

@@ -12,25 +12,19 @@ and keeps chord <= chord(r).
 
 from __future__ import annotations
 
-import pickle
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from geo_spark.kernel import cellid as ck
 from geo_spark.kernel import cellunion as cu
 from geo_spark.kernel.coverer import RegionCoverer
 from geo_spark.kernel.regions import Region, chord2_from_angle, distance_chord2
 from geo_spark.operators.spatial_join import (
-    COVER_SCHEMA,
-    GEOM_SCHEMA,
     Layer,
-    _cached_region,
+    _build,
     _candidates,
-    _ensure_parallelism,
-    _geoms_for_join,
+    _refine_by_region,
 )
 
 
@@ -44,9 +38,6 @@ def build_distance_layer(
     non-interior (distance refine always runs — a cell fully inside the
     *buffered* region does not certify distance <= r pointwise, so no
     skip flag is claimed)."""
-    regions = list(regions)
-    rows = [(int(gid), pickle.dumps(r)) for gid, r in regions]
-    geoms = spark.createDataFrame(rows, GEOM_SCHEMA)
     coverer = RegionCoverer(max_cells=max_cells)
     # Polyline fast path: the buffered covering is closed-form — the
     # cells the chain passes through at the radius level (supercover
@@ -61,80 +52,20 @@ def build_distance_layer(
 
     radius_level = metric.MIN_WIDTH.max_level(radius_rad)
 
-    def cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"geom_id": [], "cell": [], "level": [], "is_interior": []}
-        for gid, blob in zip(pdf["geom_id"], pdf["blob"]):
-            region = pickle.loads(blob)
-            if isinstance(region, PolylineRegion) and len(region.verts) >= 2:
-                core: set[int] = set()
-                v = region.verts
-                for i in range(len(v) - 1):
-                    core.update(
-                        int(c)
-                        for c in edge_cells_at_level(v[i], v[i + 1], radius_level)
-                    )
-                buffered = cu.expand_at_level(sorted(core), radius_level)
-            else:
-                cover = coverer.covering(region)
-                buffered = cu.expand_by_radius(cover, radius_rad)
-            for c in buffered:
-                out["geom_id"].append(gid)
-                out["cell"].append(int(ck.to_signed(np.uint64(c))))
-                out["level"].append(cu._level(c))
-                out["is_interior"].append(False)
-        return pd.DataFrame(
-            {
-                "geom_id": pd.Series(out["geom_id"], dtype="int64"),
-                "cell": pd.Series(out["cell"], dtype="int64"),
-                "level": pd.Series(out["level"], dtype="int32"),
-                "is_interior": pd.Series(out["is_interior"], dtype="bool"),
-            }
-        )
+    def cells_of(region: Region):
+        if isinstance(region, PolylineRegion) and len(region.verts) >= 2:
+            core: set[int] = set()
+            v = region.verts
+            for i in range(len(v) - 1):
+                core.update(
+                    int(c) for c in edge_cells_at_level(v[i], v[i + 1], radius_level)
+                )
+            buffered = cu.expand_at_level(sorted(core), radius_level)
+        else:
+            buffered = cu.expand_by_radius(coverer.covering(region), radius_rad)
+        return [(c, False) for c in buffered]
 
-    # Below DRIVER_COVER_GEOMS the buffered covering is computed
-    # directly in the driver (identical math, minus two Spark jobs);
-    # above it the per-geometry covering cost dominates and the same
-    # function runs distributed (same split as build_layer).  The
-    # region map ships in closures only up to MAX_CLOSURE_GEOMS —
-    # bigger layers refine through the distributed blob-join tier.
-    from geo_spark.operators.spatial_join import DRIVER_COVER_GEOMS
-
-    if len(regions) <= DRIVER_COVER_GEOMS:
-        cpdf = cover_one(
-            pd.DataFrame(
-                {"geom_id": [g for g, _ in rows], "blob": [b for _, b in rows]}
-            )
-        )
-        covering = spark.createDataFrame(cpdf, COVER_SCHEMA)
-        levels = sorted(cpdf["level"].unique().tolist())
-        n_cov = len(cpdf)
-    else:
-        def cover_iter(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield cover_one(pdf)
-
-        covering = _ensure_parallelism(geoms).mapInPandas(
-            cover_iter, COVER_SCHEMA
-        ).persist()
-        # one metadata job: level set + row count from per-level counts
-        lvl_rows = covering.groupBy("level").count().collect()
-        levels = sorted(r["level"] for r in lvl_rows)
-        n_cov = sum(r["count"] for r in lvl_rows)
-    region_map = (
-        {int(g): r for g, r in regions}
-        if len(regions) <= Layer.MAX_CLOSURE_GEOMS
-        else None
-    )
-    return Layer(
-        geoms,
-        covering,
-        levels,
-        region_map,
-        covering_rows=n_cov,
-        n_geoms=len(regions),
-        radius_rad=radius_rad,
-    )
+    return _build(spark, regions, cells_of, radius_rad=radius_rad)
 
 
 def distance_join(
@@ -147,51 +78,34 @@ def distance_join(
 ) -> DataFrame:
     """(point_key, geom_id, chord2) for points within the radius.
 
-    Closure-size layers (<= Layer.MAX_CLOSURE_GEOMS regions) refine
-    shuffle-free with the region map shipped in the task closure;
-    bigger layers (a real road network is millions of segments, the
-    EdgeQuery contract has no index-size ceiling —
-    s2/edge_query.go:177-763) attach the geometry blobs to the
-    candidate rows by a broadcast/AQE blob join and run the identical
-    batch-local grouped refine (see spatial_join._refine)."""
+    The candidate rows take the covering join's one refine path
+    (spatial_join._refine_by_region): closure-size layers ship the
+    region map in the task closure; bigger layers (a real road network
+    is millions of segments, the EdgeQuery contract has no index-size
+    ceiling — s2/edge_query.go:177-763) attach the geometry blobs to
+    the candidate rows by a broadcast/AQE blob join."""
     pts = points.select(point_key, cell_col, *latlng)
-    cand = _ensure_parallelism(_candidates(pts, layer, cell_col))
     limit2 = chord2_from_angle(radius_rad)
-    regions = layer.regions
-    if regions is None:
-        cand = cand.join(_geoms_for_join(layer), "geom_id")
-
     key_type = pts.schema[point_key].dataType.simpleString()
     schema = f"{point_key} {key_type}, geom_id long, chord2 double"
 
-    def fn(batches):
-        cache: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x, y, z = ck.latlng_to_xyz(
-                pdf[latlng[0]].to_numpy(np.float64),
-                pdf[latlng[1]].to_numpy(np.float64),
-            )
-            p3 = np.stack([x, y, z], axis=1)
-            gids = pdf["geom_id"].to_numpy(np.int64)
-            d = np.full(len(pdf), np.inf)
-            for gid in np.unique(gids):
-                m = gids == gid
-                if regions is not None:
-                    region = regions[int(gid)]
-                else:
-                    region = _cached_region(
-                        cache, int(gid), pdf["blob"].iloc[int(np.argmax(m))]
-                    )
-                d[m] = distance_chord2(region, p3[m])
-            keep = d <= limit2
-            yield pd.DataFrame(
-                {
-                    point_key: pdf[point_key].to_numpy()[keep],
-                    "geom_id": gids[keep],
-                    "chord2": d[keep],
-                }
-            )
+    def within(pdf, inv, regs):
+        x, y, z = ck.latlng_to_xyz(
+            pdf[latlng[0]].to_numpy(np.float64),
+            pdf[latlng[1]].to_numpy(np.float64),
+        )
+        p3 = np.stack([x, y, z], axis=1)
+        d = np.full(len(pdf), np.inf)
+        for i, region in enumerate(regs):
+            m = inv == i
+            d[m] = distance_chord2(region, p3[m])
+        keep = d <= limit2
+        return pd.DataFrame(
+            {
+                point_key: pdf[point_key].to_numpy()[keep],
+                "geom_id": pdf["geom_id"].to_numpy(np.int64)[keep],
+                "chord2": d[keep],
+            }
+        )
 
-    return cand.mapInPandas(fn, schema)
+    return _refine_by_region(_candidates(pts, layer, cell_col), layer, within, schema)

@@ -207,15 +207,6 @@ def _resolve_tie_runs(pts, chord2, order, topk, kk, tmat, tids):
     return topk
 
 
-def _auto_level(n_targets: int, k: int) -> int:
-    """Bucket level for ring expansion: ~max(k, 4) targets per cell with
-    a 64-targets/cell density ceiling (tuned A/B in round 2)."""
-    cells_wanted = max(6, n_targets // max(k, 4))
-    l_target = int(np.ceil(np.log2(max(cells_wanted / 6, 1)) / 2))
-    l_cap = int(np.ceil(np.log2(max(n_targets / (6 * 64), 1)) / 2))
-    return max(0, min(30, max(l_target, l_cap)))
-
-
 def _knn_broadcast_ring(
     points: DataFrame,
     targets: DataFrame,
@@ -253,13 +244,13 @@ def _knn_broadcast_ring(
     tlng = np.array([r[2] for r in rows], dtype=np.float64)
     n_targets = len(tids)
     if level is None:
-        # Coarser than the distributed path's _auto_level on purpose:
+        # Coarser than _knn_ring's level choice on purpose:
         # here the expansion loop is task-local Python, so the cost
         # model inverts — per-CELL interpreter overhead dominates and
         # per-candidate GEMM work is nearly free.  ~48 targets/cell
         # keeps the per-task loop at O(100) iterations while each
         # merge stays a single vectorized fold (A/B'd round 3:
-        # 25s -> ~3s at 100k points x 5000 targets vs _auto_level).
+        # 25s -> ~3s at 100k points x 5000 targets vs _knn_ring's).
         level = max(
             0, min(30, int(np.log2(max(n_targets / (6 * 48), 1)) / 2))
         )

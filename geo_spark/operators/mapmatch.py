@@ -38,13 +38,7 @@ from geo_spark.kernel.edges import (
     point_to_edges_chord2_argmin,
 )
 from geo_spark.kernel.regions import PolylineRegion, chord2_from_angle
-from geo_spark.operators.spatial_join import (
-    Layer,
-    _cached_region,
-    _candidates,
-    _ensure_parallelism,
-    _geoms_for_join,
-)
+from geo_spark.operators.spatial_join import Layer, _candidates, _refine_by_region
 
 
 def refine_candidates(
@@ -60,20 +54,15 @@ def refine_candidates(
     the global per-point argmin.  Stateless, so it runs unchanged on a
     streaming points DataFrame (stream-static join + mapInPandas).
 
-    Layers above Layer.MAX_CLOSURE_GEOMS (real road networks are
-    millions of segments; the reference's EdgeQuery has no index-size
-    ceiling, s2/edge_query.go:177-763) refine through the distributed
-    blob-join tier: the polyline blobs ride the candidate rows
-    (broadcast join for <= BROADCAST_MAX_GEOM_ROWS geometries, AQE
-    shuffle join above), the grouping stays batch-local, and the
-    per-point argmin shuffle downstream is unchanged."""
+    The refine is the covering join's one refine path
+    (spatial_join._refine_by_region): layers above
+    Layer.MAX_CLOSURE_GEOMS (real road networks are millions of
+    segments; the reference's EdgeQuery has no index-size ceiling,
+    s2/edge_query.go:177-763) get the polyline blobs on the candidate
+    rows instead of in the closure; the grouping stays batch-local, and
+    the per-point argmin shuffle downstream is unchanged."""
     pts = points.select(point_key, cell_col, *latlng)
-    cand = _ensure_parallelism(_candidates(pts, layer, cell_col))
     limit2 = chord2_from_angle(radius_rad)
-    regions = layer.regions
-    if regions is None:
-        cand = cand.join(_geoms_for_join(layer), "geom_id")
-
     key_type = pts.schema[point_key].dataType.simpleString()
     schema = f"{point_key} {key_type}, geom_id long, seg_idx long, chord2 double"
 
@@ -84,72 +73,54 @@ def refine_candidates(
     # take the batch-vectorized path.
     max_pad_verts = 64
 
-    def fn(batches):
-        cache: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x, y, z = ck.latlng_to_xyz(
-                pdf[latlng[0]].to_numpy(np.float64),
-                pdf[latlng[1]].to_numpy(np.float64),
-            )
-            p3 = np.stack([x, y, z], axis=1)
-            gids = pdf["geom_id"].to_numpy(np.int64)
-            uniq, first, inv = np.unique(
-                gids, return_index=True, return_inverse=True
-            )
-            if regions is not None:
-                regs = [regions[int(g)] for g in uniq]
-            else:
-                blobs = pdf["blob"]
-                regs = [
-                    _cached_region(cache, int(g), blobs.iloc[int(i)])
-                    for g, i in zip(uniq, first)
-                ]
-            for rg in regs:
-                if not isinstance(rg, PolylineRegion):
-                    raise TypeError("map_match layers must hold PolylineRegions")
-            max_v = max(len(rg.verts) for rg in regs)
-            if max_v <= max_pad_verts:
-                # ONE vectorized chord2 sweep per segment slot across
-                # the whole batch: rows gather their chain's vertices
-                # from the NaN-padded (n_uniq, max_v, 3) table; padded
-                # segments yield NaN and never win the strict-< update
-                # (so ties still take the lowest segment index, exactly
-                # like point_to_edges_chord2_argmin).
-                V = np.full((len(regs), max_v, 3), np.nan)
-                for i, rg in enumerate(regs):
-                    V[i, : len(rg.verts)] = rg.verts
-                rowv = V[inv]  # (n, max_v, 3)
-                d = np.full(len(pdf), 4.0)
-                seg = np.zeros(len(pdf), dtype=np.int64)
-                with np.errstate(invalid="ignore"):
-                    for s in range(max_v - 1):
-                        ds = point_segment_chord2(
-                            p3, rowv[:, s], rowv[:, s + 1]
-                        )
-                        m = ds < d
-                        d[m] = ds[m]
-                        seg[m] = s
-            else:
-                d = np.full(len(pdf), np.inf)
-                seg = np.zeros(len(pdf), dtype=np.int64)
-                for i, gid in enumerate(uniq):
-                    m = inv == i
-                    d[m], seg[m] = point_to_edges_chord2_argmin(
-                        p3[m], regs[i].verts
-                    )
-            keep = d <= limit2
-            yield pd.DataFrame(
-                {
-                    point_key: pdf[point_key].to_numpy()[keep],
-                    "geom_id": gids[keep],
-                    "seg_idx": seg[keep],
-                    "chord2": d[keep],
-                }
-            )
+    def nearest_segment(pdf, inv, regs):
+        x, y, z = ck.latlng_to_xyz(
+            pdf[latlng[0]].to_numpy(np.float64),
+            pdf[latlng[1]].to_numpy(np.float64),
+        )
+        p3 = np.stack([x, y, z], axis=1)
+        for rg in regs:
+            if not isinstance(rg, PolylineRegion):
+                raise TypeError("map_match layers must hold PolylineRegions")
+        max_v = max(len(rg.verts) for rg in regs)
+        if max_v <= max_pad_verts:
+            # ONE vectorized chord2 sweep per segment slot across
+            # the whole batch: rows gather their chain's vertices
+            # from the NaN-padded (n_uniq, max_v, 3) table; padded
+            # segments yield NaN and never win the strict-< update
+            # (so ties still take the lowest segment index, exactly
+            # like point_to_edges_chord2_argmin).
+            V = np.full((len(regs), max_v, 3), np.nan)
+            for i, rg in enumerate(regs):
+                V[i, : len(rg.verts)] = rg.verts
+            rowv = V[inv]  # (n, max_v, 3)
+            d = np.full(len(pdf), 4.0)
+            seg = np.zeros(len(pdf), dtype=np.int64)
+            with np.errstate(invalid="ignore"):
+                for s in range(max_v - 1):
+                    ds = point_segment_chord2(p3, rowv[:, s], rowv[:, s + 1])
+                    m = ds < d
+                    d[m] = ds[m]
+                    seg[m] = s
+        else:
+            d = np.full(len(pdf), np.inf)
+            seg = np.zeros(len(pdf), dtype=np.int64)
+            for i, rg in enumerate(regs):
+                m = inv == i
+                d[m], seg[m] = point_to_edges_chord2_argmin(p3[m], rg.verts)
+        keep = d <= limit2
+        return pd.DataFrame(
+            {
+                point_key: pdf[point_key].to_numpy()[keep],
+                "geom_id": pdf["geom_id"].to_numpy(np.int64)[keep],
+                "seg_idx": seg[keep],
+                "chord2": d[keep],
+            }
+        )
 
-    return cand.mapInPandas(fn, schema)
+    return _refine_by_region(
+        _candidates(pts, layer, cell_col), layer, nearest_segment, schema
+    )
 
 
 def map_match(

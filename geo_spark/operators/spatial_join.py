@@ -19,15 +19,17 @@ Scale design (the part the reference, being single-node, doesn't have):
   children (``split_hot_cells``) — a *semantic* salt: the children are
   still valid covering cells, so results are invariant to the split
   while the join keys fan out;
-- the refine is shuffle-free for dimension-table layers: regions ship
-  in the task closure and each Arrow batch runs one vectorized
-  predicate per geometry present (``mapInPandas``); huge layers fall
-  back to a broadcast-join + per-geometry grouped apply.  Never
-  per-row Python either way.
+- one refine path (``_refine_by_region``) for every covering-join
+  operator: dimension-table layers ship their regions in the task
+  closure, huge layers attach the geometry blobs by an equi-join; each
+  Arrow batch runs one vectorized predicate per geometry present
+  (``mapInPandas``).  Never per-row Python, never a per-geometry keyed
+  group.
 """
 
 from __future__ import annotations
 
+import functools
 import pickle
 from typing import Iterable
 
@@ -71,7 +73,8 @@ class Layer:
 
     ``regions`` (driver-side dict) is kept when the layer is small enough
     to ship in task closures — the refine then runs as a shuffle-free
-    mapInPandas instead of a per-geometry grouped apply."""
+    mapInPandas instead of joining the geometry blobs onto the
+    candidate rows (``_refine_by_region``)."""
 
     MAX_CLOSURE_GEOMS = 20000
 
@@ -99,6 +102,115 @@ class Layer:
         # the distributed knn_regions tier is radius-bounded by it.
         self.radius_rad = radius_rad
 
+    @functools.cached_property
+    def prefilter_cells(self) -> list[int] | None:
+        """Distinct ``levels[0]`` ancestors of the covering cells — the
+        key set of ``_coarse_prefilter`` — or None above 10,000 keys.
+        A fact of the layer, not of a join: one Spark job the first time
+        it is read, none after (driver-built layers fill it for free)."""
+        l0 = self.levels[0]
+        rows = (
+            self.covering.select(s2sql.parent(F.col("cell"), l0).alias("a"))
+            .distinct()
+            .limit(10001)
+            .collect()
+        )
+        return _prefilter_keys([r["a"] for r in rows])
+
+
+def _prefilter_keys(ancestors: list[int]) -> list[int] | None:
+    return ancestors if len(ancestors) <= 10000 else None
+
+
+def _build(
+    spark: SparkSession,
+    regions: Iterable[tuple[int, Region]],
+    cells_of,
+    num_partitions: int | None = None,
+    radius_rad: float | None = None,
+) -> Layer:
+    """The one layer builder behind ``build_layer`` and
+    ``distance_join.build_distance_layer``: ``cells_of(region)`` yields
+    the region's (cell id, is_interior) covering rows, everything else —
+    driver or distributed covering, level set, closure map — is here."""
+    regions = list(regions)
+    rows = [(int(gid), pickle.dumps(region)) for gid, region in regions]
+    geoms = spark.createDataFrame(rows, GEOM_SCHEMA)
+    if num_partitions:
+        geoms = geoms.repartition(num_partitions, "geom_id")
+
+    def cover(gids, regs) -> pd.DataFrame:
+        out_gid, out_cell, out_int = [], [], []
+        for gid, region in zip(gids, regs):
+            for c, is_int in cells_of(region):
+                out_gid.append(gid)
+                out_cell.append(c)
+                out_int.append(is_int)
+        cells = np.array(out_cell, dtype=np.uint64)
+        return pd.DataFrame(
+            {
+                "geom_id": pd.Series(out_gid, dtype="int64"),
+                "cell": ck.to_signed(cells),
+                "level": ck.level(cells).astype(np.int32),
+                "is_interior": pd.Series(out_int, dtype="bool"),
+            }
+        )
+
+    in_driver = len(regions) <= DRIVER_COVER_GEOMS
+    if in_driver:
+        # Dimension-table layer: run the identical covering computation
+        # in the driver (it ends up collected as literal rows either
+        # way), skipping two Spark jobs + a Python-worker round-trip —
+        # the 50-loop city layer drops from ~7s to sub-second.  The
+        # literal rows are pinned so downstream actions never re-run the
+        # covering computation.
+        pdf = cover([g for g, _ in rows], [r for _, r in regions])
+        covering = spark.createDataFrame(pdf, COVER_SCHEMA)
+        levels = sorted(pdf["level"].unique().tolist())
+        n_cov = len(pdf)
+    else:
+        # Hundreds+ of geometries: the covering computation itself is
+        # the cost (a complex region covers in ~10-30 ms) — distribute
+        # it.  mapInPandas over the blob batches, NOT a per-geometry
+        # groupBy: no shuffle, and batches of geometries amortize the
+        # Arrow/pandas per-call overhead that one-row groups pay.
+        def cover_iter(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield cover(
+                        pdf["geom_id"].tolist(),
+                        [pickle.loads(b) for b in pdf["blob"]],
+                    )
+
+        covering = _ensure_parallelism(geoms).mapInPandas(
+            cover_iter, COVER_SCHEMA
+        )
+        covering = covering.persist()
+        # ONE metadata job: per-level counts give the level set and the
+        # total row count together (and materialize the persist).
+        lvl_rows = covering.groupBy("level").count().collect()
+        levels = sorted(r["level"] for r in lvl_rows)
+        n_cov = sum(r["count"] for r in lvl_rows)
+    # The region MAP ships in closures when small enough (the map is the
+    # input list, not the coverings); bigger layers refine through the
+    # blob-join tier of ``_refine_by_region``.
+    layer = Layer(
+        geoms,
+        covering,
+        levels,
+        {int(g): r for g, r in regions}
+        if len(regions) <= Layer.MAX_CLOSURE_GEOMS
+        else None,
+        covering_rows=n_cov,
+        n_geoms=len(regions),
+        radius_rad=radius_rad,
+    )
+    if in_driver and levels:
+        cells = ck.from_signed(pdf["cell"].to_numpy(np.int64))
+        anc = ck.to_signed(ck.parent(cells, levels[0]))
+        layer.prefilter_cells = _prefilter_keys(np.unique(anc).tolist())
+    return layer
+
 
 def build_layer(
     spark: SparkSession,
@@ -119,123 +231,41 @@ def build_layer(
     (fewer candidates), fully-contained children become interior (fewer
     refines); only the shrinking boundary band still refines.
     """
-    regions = list(regions)
-    rows = [(int(gid), pickle.dumps(region)) for gid, region in regions]
-    geoms = spark.createDataFrame(rows, GEOM_SCHEMA)
-    if num_partitions:
-        geoms = geoms.repartition(num_partitions, "geom_id")
+    from geo_spark.kernel.cell import Cell
 
     coverer = RegionCoverer(
         min_level=min_level, max_level=max_level, max_cells=max_cells
     )
-    want_interior = interior
 
-    def cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        from geo_spark.kernel.cell import Cell
+    def cells_of(region: Region):
+        covering = coverer.covering(region)
+        if not interior:
+            return [(c, False) for c in covering]
+        # Level-synchronous BFS so every round's contains/may tests
+        # run as ONE batched relate_cells call (LoopRegion vectorizes
+        # the whole frontier; other shapes fall back to scalar).
+        # Semantics identical to the per-cell DFS: interior cells
+        # emit, disjoint children drop, boundary cells split until
+        # the depth budget.  Root covering cells are never may-
+        # filtered (the DFS pushed them unconditionally).
+        out = []
+        frontier = [(Cell.from_id(c), cu._level(c)) for c in covering]
+        root = True
+        while frontier:
+            contains, may = region.relate_cells([c for c, _ in frontier])
+            nxt = []
+            for (cell, base), isc, m_ok in zip(frontier, contains, may):
+                if not root and not m_ok:
+                    continue
+                if isc or cell.level - base >= subdivide or cell.level >= max_level:
+                    out.append((cell.id, bool(isc)))
+                    continue
+                nxt.extend((child, base) for child in cell.children())
+            frontier = nxt
+            root = False
+        return out
 
-        out_gid, out_cell, out_lvl, out_int = [], [], [], []
-
-        def emit(gid: int, c: int, is_int: bool) -> None:
-            out_gid.append(gid)
-            out_cell.append(int(ck.to_signed(np.uint64(c))))
-            out_lvl.append(cu._level(c))
-            out_int.append(is_int)
-
-        for gid, blob in zip(pdf["geom_id"], pdf["blob"]):
-            region = pickle.loads(blob)
-            covering = coverer.covering(region)
-            if not want_interior:
-                for c in covering:
-                    emit(gid, c, False)
-                continue
-            # Level-synchronous BFS so every round's contains/may tests
-            # run as ONE batched relate_cells call (LoopRegion vectorizes
-            # the whole frontier; other shapes fall back to scalar).
-            # Semantics identical to the per-cell DFS: interior cells
-            # emit, disjoint children drop, boundary cells split until
-            # the depth budget.  Root covering cells are never may-
-            # filtered (the DFS pushed them unconditionally).
-            frontier = [(Cell.from_id(c), cu._level(c)) for c in covering]
-            root = True
-            while frontier:
-                contains, may = region.relate_cells([c for c, _ in frontier])
-                nxt = []
-                for (cell, base), isc, m_ok in zip(frontier, contains, may):
-                    if not root and not m_ok:
-                        continue
-                    if (
-                        isc
-                        or cell.level - base >= subdivide
-                        or cell.level >= max_level
-                    ):
-                        emit(gid, cell.id, bool(isc))
-                        continue
-                    nxt.extend((child, base) for child in cell.children())
-                frontier = nxt
-                root = False
-        return pd.DataFrame(
-            {
-                "geom_id": pd.Series(out_gid, dtype="int64"),
-                "cell": pd.Series(out_cell, dtype="int64"),
-                "level": pd.Series(out_lvl, dtype="int32"),
-                "is_interior": pd.Series(out_int, dtype="bool"),
-            }
-        )
-
-    if len(regions) <= DRIVER_COVER_GEOMS:
-        # Dimension-table layer: run the identical covering computation
-        # in the driver (it ends up collected as literal rows either
-        # way), skipping two Spark jobs + a Python-worker round-trip —
-        # the 50-loop city layer drops from ~7s to sub-second.  The
-        # literal rows are pinned so downstream actions never re-run the
-        # covering computation.
-        pdf = cover_one(
-            pd.DataFrame(
-                {
-                    "geom_id": [g for g, _ in rows],
-                    "blob": [b for _, b in rows],
-                }
-            )
-        )
-        covering = spark.createDataFrame(pdf, COVER_SCHEMA)
-        levels = sorted(pdf["level"].unique().tolist())
-        region_map = {int(g): r for g, r in regions}
-        n_cov = len(pdf)
-    else:
-        # Hundreds+ of geometries: the covering computation itself is
-        # the cost (a complex region covers in ~10-30 ms) — distribute
-        # it.  mapInPandas over the blob batches, NOT a per-geometry
-        # groupBy: no shuffle, and batches of geometries amortize the
-        # Arrow/pandas per-call overhead that one-row groups pay.
-        # The region MAP still ships in closures when small enough
-        # (the map is the input list, not the coverings).
-        def cover_iter(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield cover_one(pdf)
-
-        covering = _ensure_parallelism(geoms).mapInPandas(
-            cover_iter, COVER_SCHEMA
-        )
-        covering = covering.persist()
-        # ONE metadata job: per-level counts give the level set and the
-        # total row count together (and materialize the persist).
-        lvl_rows = covering.groupBy("level").count().collect()
-        levels = [r["level"] for r in lvl_rows]
-        region_map = (
-            {int(g): r for g, r in regions}
-            if len(regions) <= Layer.MAX_CLOSURE_GEOMS
-            else None
-        )
-        n_cov = sum(r["count"] for r in lvl_rows)
-    return Layer(
-        geoms,
-        covering,
-        sorted(levels),
-        region_map,
-        covering_rows=n_cov,
-        n_geoms=len(regions),
-    )
+    return _build(spark, regions, cells_of, num_partitions=num_partitions)
 
 
 def split_hot_cells(
@@ -316,19 +346,12 @@ def _coarse_prefilter(points: DataFrame, layer: Layer, cell_col: str) -> DataFra
     and the x|levels| explode then runs only on surviving points (the
     covering-term join's row multiplier applied to ~the hit rate instead
     of the whole corpus)."""
-    if not layer.levels:
+    if not layer.levels or layer.prefilter_cells is None:
         return points
     l0 = layer.levels[0]
-    rows = (
-        layer.covering.select(s2sql.parent(F.col("cell"), l0).alias("a"))
-        .distinct()
-        .limit(10001)
-        .collect()
+    return points.where(
+        s2sql.parent(F.col(cell_col), l0).isin(layer.prefilter_cells)
     )
-    ancestors = [r["a"] for r in rows]
-    if len(ancestors) > 10000:
-        return points
-    return points.where(s2sql.parent(F.col(cell_col), l0).isin(ancestors))
 
 
 def _candidates(points: DataFrame, layer: Layer, cell_col: str) -> DataFrame:
@@ -336,8 +359,17 @@ def _candidates(points: DataFrame, layer: Layer, cell_col: str) -> DataFrame:
 
     The explode emits one row per covering *level* (bounded by the level
     window, typically <= 8 — s2/region_term_indexer.go:140-143 ancestor
-    terms), not per covering cell."""
+    terms), not per covering cell.
+
+    The candidate rows are spread over the cluster before the refine
+    sees them: through a broadcast covering they keep the point side's
+    partitioning, so the guard runs on the (pre-explode) points, where
+    counting partitions plans no job; a shuffled covering sets its own
+    partitioning, so the guard runs on the join."""
     points = _coarse_prefilter(points, layer, cell_col)
+    small = _is_small(layer)
+    if small:
+        points = _ensure_parallelism(points)
     # One struct per covering level with a *literal* parent mask — the
     # whole key computation stays inside whole-stage codegen.
     pairs = F.array(
@@ -353,10 +385,11 @@ def _candidates(points: DataFrame, layer: Layer, cell_col: str) -> DataFrame:
         "*", F.col("_lk._lvl").alias("_lvl"), F.col("_lk._key").alias("_key")
     ).drop("_lk")
     cov = layer.covering
-    return pts.join(
-        cov.hint("broadcast") if _is_small(layer) else cov,
+    cand = pts.join(
+        cov.hint("broadcast") if small else cov,
         (pts["_lvl"] == cov["level"]) & (pts["_key"] == cov["cell"]),
     ).drop("_lvl", "_key")
+    return cand if small else _ensure_parallelism(cand)
 
 
 # ~30 bytes/row -> a 200k-row covering broadcasts in a few MB.
@@ -372,13 +405,6 @@ BROADCAST_MAX_GEOM_ROWS = 200_000
 # road network's working set per input split is far smaller than the
 # layer, so hits dominate; the clear() on overflow bounds memory.
 _REGION_CACHE_CAP = 8192
-
-
-def _geoms_for_join(layer: Layer) -> DataFrame:
-    g = layer.geoms
-    if layer.n_geoms is not None and layer.n_geoms <= BROADCAST_MAX_GEOM_ROWS:
-        return F.broadcast(g)
-    return g
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -422,6 +448,56 @@ def _is_small(layer: Layer) -> bool:
     )
 
 
+def _refine_by_region(
+    cand: DataFrame,
+    layer: Layer,
+    kernel,
+    schema: str,
+    id_col: str = "geom_id",
+) -> DataFrame:
+    """The covering join's one refine path: how a layer's geometries
+    reach the candidate rows.
+
+    Each non-empty Arrow batch calls ``kernel(pdf, inv, regs)``, where
+    ``regs`` are the regions of the batch's unique ``id_col`` values and
+    ``inv[i]`` indexes row i's region; the kernel returns the output
+    frame.  Closure-size layers ship their region map in the task
+    closure (shuffle-free mapInPandas).  Bigger ones attach the
+    geometry blobs to the candidate rows by an equi-join on ``id_col``
+    — broadcast up to BROADCAST_MAX_GEOM_ROWS geometries, else a
+    shuffle join whose skewed partitions AQE splits — and unpickle each
+    region once per task.  Either way the grouping is batch-local, never
+    a per-geometry keyed group, so one dense geometry never pins one
+    task."""
+    regions = layer.regions
+    if regions is None:
+        geoms = layer.geoms.withColumnRenamed("geom_id", id_col)
+        if layer.n_geoms is not None and layer.n_geoms <= BROADCAST_MAX_GEOM_ROWS:
+            geoms = F.broadcast(geoms)
+        cand = cand.join(geoms, id_col)
+
+    def fn(batches):
+        cache: dict = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy(np.int64)
+            uniq, first, inv = np.unique(
+                ids, return_index=True, return_inverse=True
+            )
+            if regions is not None:
+                regs = [regions[int(g)] for g in uniq]
+            else:
+                blobs = pdf["blob"]
+                regs = [
+                    _cached_region(cache, int(g), blobs.iloc[int(i)])
+                    for g, i in zip(uniq, first)
+                ]
+            yield kernel(pdf, inv, regs)
+
+    return cand.mapInPandas(fn, schema)
+
+
 def spatial_join(
     points: DataFrame,
     layer: Layer,
@@ -454,8 +530,27 @@ def spatial_join(
     sure = cand.where(F.col("is_interior")).select(point_key, "geom_id", *carry)
     unsure = cand.where(~F.col("is_interior"))
 
-    refined = _refine(unsure, layer, point_key, cell_col, carry, latlng)
-    matches = sure.unionByName(refined)
+    key_type = unsure.schema[point_key].dataType.simpleString()
+    schema = ", ".join(
+        ["geom_id long", f"{point_key} {key_type}"]
+        + [f"{c} {unsure.schema[c].dataType.simpleString()}" for c in carry]
+    )
+
+    def contains(pdf, inv, regs):
+        pts = _points_xyz(pdf, cell_col, latlng)
+        keep = np.zeros(len(pdf), dtype=bool)
+        for i, region in enumerate(regs):
+            m = inv == i
+            keep[m] = region.contains_points(pts[m])
+        out = {
+            "geom_id": pdf["geom_id"].to_numpy(np.int64)[keep],
+            point_key: pdf[point_key].to_numpy()[keep],
+        }
+        for c in carry:
+            out[c] = pdf[c].to_numpy()[keep]
+        return pd.DataFrame(out)
+
+    matches = sure.unionByName(_refine_by_region(unsure, layer, contains, schema))
 
     if how == "inner":
         return matches
@@ -463,63 +558,6 @@ def spatial_join(
         keys = matches.select(point_key).distinct()
         return points.join(keys, on=point_key, how=how)
     raise ValueError(f"unsupported how={how!r}")
-
-
-def _refine(
-    unsure: DataFrame,
-    layer: Layer,
-    point_key: str,
-    cell_col: str,
-    carry: tuple[str, ...],
-    latlng: tuple[str, str] | None,
-) -> DataFrame:
-    """Exact containment of the non-interior candidates.
-
-    Fast path (layer fits in the closure): shuffle-free mapInPandas —
-    each Arrow batch is grouped by geom_id in-memory and hit with one
-    vectorized predicate per geometry present.  No extra shuffle, no
-    per-geometry group skew (dense-city geometries would otherwise pin
-    single tasks).  Huge layers take the same shape with the blobs
-    attached by a join instead of the closure: candidates stay in
-    their input-split partitions (broadcast blob join) or AQE splits
-    the skewed ones (shuffle blob join) — never a per-geometry keyed
-    group, so one dense-city geometry never pins one task."""
-    unsure = _ensure_parallelism(unsure)
-    if layer.regions is not None:
-        return _refine_closure(unsure, layer.regions, point_key, cell_col, carry, latlng)
-    joined = unsure.join(_geoms_for_join(layer), "geom_id")
-
-    key_type = unsure.schema[point_key].dataType.simpleString()
-    carry_types = {c: unsure.schema[c].dataType.simpleString() for c in carry}
-    schema = ", ".join(
-        ["geom_id long", f"{point_key} {key_type}"]
-        + [f"{c} {t}" for c, t in carry_types.items()]
-    )
-
-    def fn(batches):
-        cache: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pts = _points_xyz(pdf, cell_col, latlng)
-            gids = pdf["geom_id"].to_numpy(np.int64)
-            blobs = pdf["blob"]
-            keep = np.zeros(len(pdf), dtype=bool)
-            for gid in np.unique(gids):
-                m = gids == gid
-                region = _cached_region(
-                    cache, int(gid), blobs.iloc[int(np.argmax(m))]
-                )
-                keep[m] = region.contains_points(pts[m])
-            out = {
-                "geom_id": gids[keep],
-                point_key: pdf[point_key].to_numpy()[keep],
-            }
-            for c in carry:
-                out[c] = pdf[c].to_numpy()[keep]
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(fn, schema)
 
 
 def _points_xyz(pdf: pd.DataFrame, cell_col: str, latlng) -> np.ndarray:
@@ -533,39 +571,6 @@ def _points_xyz(pdf: pd.DataFrame, cell_col: str, latlng) -> np.ndarray:
     x, y, z = ck.cellid_to_xyz(cells)
     pts = np.stack([x, y, z], axis=1)
     return pts / np.sqrt((pts * pts).sum(axis=1))[:, None]
-
-
-def _refine_closure(
-    unsure: DataFrame,
-    regions: dict[int, Region],
-    point_key: str,
-    cell_col: str,
-    carry: tuple[str, ...],
-    latlng,
-) -> DataFrame:
-    key_type = unsure.schema[point_key].dataType.simpleString()
-    carry_types = {c: unsure.schema[c].dataType.simpleString() for c in carry}
-    schema = ", ".join(
-        ["geom_id long", f"{point_key} {key_type}"]
-        + [f"{c} {t}" for c, t in carry_types.items()]
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pts = _points_xyz(pdf, cell_col, latlng)
-            gids = pdf["geom_id"].to_numpy(np.int64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for gid in np.unique(gids):
-                m = gids == gid
-                keep[m] = regions[int(gid)].contains_points(pts[m])
-            out = {"geom_id": gids[keep], point_key: pdf[point_key].to_numpy()[keep]}
-            for c in carry:
-                out[c] = pdf[c].to_numpy()[keep]
-            yield pd.DataFrame(out)
-
-    return unsure.mapInPandas(fn, schema)
 
 
 def auto_salt_layer(

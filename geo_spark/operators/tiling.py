@@ -1116,9 +1116,9 @@ def changepoint_from_daily(daily: DataFrame) -> DataFrame:
             F.sum("cnt")
             .over(w.rowsBetween(Window.unboundedPreceding, 0))
             .alias("_p"),
+            F.sum("cnt").over(wall).alias("_t"),
         )
         .withColumn("_n", F.count(F.lit(1)).over(wall))
-        .withColumn("_t", F.max(F.col("_p")).over(wall))
         .where((F.col("_n") >= 2) & (F.col("_k") < F.col("_n")))
         .selectExpr(
             "qk",

@@ -23,7 +23,7 @@ without it, duplicate-ts fixes made drained==batch hold only for
 ts-unique traces).  With no tiebreak_col the fallback sort is
 (ts_us, site), deterministic but batch-equivalent only when ts is
 unique per user — that uniqueness is then a hard contract of this
-operator.  Ties SPLIT ACROSS micro-batches are unrecoverable by any
+operator, ENFORCED within each batch: a duplicate per-user ts raises.  Ties SPLIT ACROSS micro-batches are unrecoverable by any
 sort (state already consumed the earlier row); keeping equal-ts rows
 of one user in one batch is the ingest's responsibility, same as the
 asof rule.  The ts contract is ENFORCED: state carries the per-user
@@ -79,6 +79,14 @@ def stream_trail_edges(
         batch = pd.concat(list(pdfs)).sort_values(
             sort_cols, kind="mergesort"
         )
+        if tiebreak_col is None and batch["ts_us"].duplicated().any():
+            dup = int(batch["ts_us"][batch["ts_us"].duplicated()].iloc[0])
+            raise ValueError(
+                f"stream_trail_edges: duplicate ts {dup} for user "
+                f"{key[0]!r} with no tiebreak_col — equal-ts fixes would "
+                f"link in (ts, site) order, not the batch operator's; "
+                f"pass tiebreak_col"
+            )
         prev, hw = state.get if state.exists else (None, None)
         if hw is not None and int(batch["ts_us"].iloc[0]) < hw:
             raise ValueError(

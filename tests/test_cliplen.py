@@ -291,10 +291,9 @@ def test_polar_cap_transection():
     assert not loop.contains_point(verts[0])
 
 
-def test_blob_tier_equals_closure_tier(spark):
+def test_blob_tier_equals_closure_tier(spark, as_distributed):
     """Forcing the trail layer above the closure ceiling must route
     through the blob-join tier and produce identical results."""
-    from geo_spark.operators import spatial_join as sj
     from geo_spark.operators.spatial_join import build_layer
 
     rng = np.random.default_rng(23)
@@ -320,14 +319,7 @@ def test_blob_tier_equals_closure_tier(spark):
     b = build_layer(spark, loops, max_cells=12)
     a_closure = build_layer(spark, trails, max_cells=8, interior=False)
     # same layer above the closure ceiling: regions dropped, blobs kept
-    a_blob = sj.Layer(
-        a_closure.geoms,
-        a_closure.covering,
-        a_closure.levels,
-        None,
-        covering_rows=a_closure.covering_rows,
-        n_geoms=a_closure.n_geoms,
-    )
+    a_blob = as_distributed(a_closure)
     assert a_blob.regions is None  # -> blob tier
     want = {
         (r["aid"], r["bid"]): (r["n_crossings"], r["inside_q"])

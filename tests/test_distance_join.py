@@ -84,22 +84,7 @@ def test_distance_zero_equals_containment(spark, pts):
     assert got == expected
 
 
-def _as_distributed(layer):
-    """Same layer, closure map dropped — forces the blob-join tier."""
-    from geo_spark.operators.spatial_join import Layer
-
-    return Layer(
-        layer.geoms,
-        layer.covering,
-        layer.levels,
-        None,
-        covering_rows=layer.covering_rows,
-        n_geoms=layer.n_geoms,
-        radius_rad=layer.radius_rad,
-    )
-
-
-def test_distance_join_distributed_tier_matches_closure(spark, pts):
+def test_distance_join_distributed_tier_matches_closure(spark, pts, as_distributed):
     df, lat, lng = pts
     layer = build_distance_layer(spark, _regions(), RADIUS)
     closure = {
@@ -109,14 +94,14 @@ def test_distance_join_distributed_tier_matches_closure(spark, pts):
     distributed = {
         (r["pid"], r["geom_id"], r["chord2"])
         for r in distance_join(
-            df, _as_distributed(layer), RADIUS, point_key="pid"
+            df, as_distributed(layer), RADIUS, point_key="pid"
         ).collect()
     }
     assert closure == distributed
     assert len(closure) > 0
 
 
-def test_knn_regions_distributed_tier_radius_bounded(spark, pts):
+def test_knn_regions_distributed_tier_radius_bounded(spark, pts, as_distributed):
     """Distributed knn_regions == brute top-k restricted to the layer's
     buffer radius; a non-distance layer (no radius) raises."""
     from geo_spark.operators.knn import knn_regions
@@ -124,7 +109,7 @@ def test_knn_regions_distributed_tier_radius_bounded(spark, pts):
 
     df, lat, lng = pts
     big_r = 0.5  # wide enough that most points see 2+ regions
-    dlayer = _as_distributed(build_distance_layer(spark, _regions(), big_r))
+    dlayer = as_distributed(build_distance_layer(spark, _regions(), big_r))
     got = {
         (r["pid"], r["geom_id"], r["rank"])
         for r in knn_regions(df, dlayer, k=2, point_key="pid").collect()

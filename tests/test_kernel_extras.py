@@ -291,3 +291,17 @@ def test_random_projection_jl_property(spark):
             orig = ((Q[a] - Q[b]) ** 2).sum() * k
             proj = ((P[a] - P[b]) ** 2).sum()
             assert 0.25 * orig < proj < 3.0 * orig, (a, b)
+
+
+def test_level_for_meters_brackets_min_width():
+    """level_for_meters picks the deepest level whose MIN_WIDTH still
+    spans the target: at least the target there, below it one level
+    deeper (s2/metric.go:134-146)."""
+    from geo_spark.kernel import metric
+
+    for m in (0.5, 3.0, 75.0, 1_000.0, 12_345.0, 400_000.0):
+        lvl = metric.level_for_meters(m)
+        target = metric.meters_to_radians(m)
+        assert 0 < lvl < 30
+        assert metric.MIN_WIDTH.value(lvl) >= target
+        assert metric.MIN_WIDTH.value(lvl + 1) < target

@@ -75,24 +75,7 @@ def test_map_match_brute_differential(spark):
         assert got[pid][2] == pytest.approx(want[pid][2], abs=0.0)
 
 
-def _as_distributed(layer):
-    """The same layer with the closure map dropped — forces the
-    distributed blob-join refine tier (what a >MAX_CLOSURE_GEOMS layer
-    gets by construction)."""
-    from geo_spark.operators.spatial_join import Layer
-
-    return Layer(
-        layer.geoms,
-        layer.covering,
-        layer.levels,
-        None,
-        covering_rows=layer.covering_rows,
-        n_geoms=layer.n_geoms,
-        radius_rad=layer.radius_rad,
-    )
-
-
-def test_map_match_distributed_tier_matches_closure(spark):
+def test_map_match_distributed_tier_matches_closure(spark, as_distributed):
     """Blob-join refine == closure refine, row for row (the
     EdgeQuery-has-no-index-ceiling contract)."""
     rng = np.random.default_rng(20260819)
@@ -114,7 +97,7 @@ def test_map_match_distributed_tier_matches_closure(spark):
         r["pid"]: (r["geom_id"], r["seg_idx"], r["chord2"])
         for r in map_match(pts, layer, RADIUS, point_key="pid").collect()
     }
-    dist_layer = _as_distributed(layer)
+    dist_layer = as_distributed(layer)
     distributed = {
         r["pid"]: (r["geom_id"], r["seg_idx"], r["chord2"])
         for r in map_match(pts, dist_layer, RADIUS, point_key="pid").collect()
@@ -123,7 +106,9 @@ def test_map_match_distributed_tier_matches_closure(spark):
     assert len(closure) > 0
 
 
-def test_map_match_distributed_plan_has_no_geom_group_exchange(spark):
+def test_map_match_distributed_plan_has_no_geom_group_exchange(
+    spark, as_distributed
+):
     """The distributed tier must never key a shuffle or a grouped
     Python stage by geom_id — one dense geometry would pin one task."""
     from pyspark.sql import functions as F
@@ -142,7 +127,7 @@ def test_map_match_distributed_plan_has_no_geom_group_exchange(spark):
         for i in range(len(lat))
     ]
     pts = spark.createDataFrame(rows, "pid long, lat double, lng double, cell_id long")
-    layer = _as_distributed(build_distance_layer(spark, trails, RADIUS))
+    layer = as_distributed(build_distance_layer(spark, trails, RADIUS))
     plan = (
         map_match(pts, layer, RADIUS, point_key="pid")
         ._jdf.queryExecution()

@@ -131,3 +131,35 @@ def test_polygon_polygon_join_with_holes(spark):
         for r in polygon_polygon_join(a, b).collect()
     }
     assert got == {(1, 11): True}  # hole one filtered out, ring one contained
+
+
+def test_wedge_intersects_matches_angular_overlap():
+    """wedge_intersects (s2/wedge_relations.go:57-66) against a brute
+    angular-interval overlap at the shared vertex: wedge (x0, o, x2) is
+    the open CCW arc of directions from x2 to x0 around o, and two open
+    arcs with distinct end points overlap iff one holds the other's
+    start."""
+    from geo_spark.kernel.relations import wedge_intersects
+
+    o = latlng_text_to_xyz("20:30")[0]
+    e1 = np.cross(o, [0.0, 0.0, 1.0])
+    e1 /= np.linalg.norm(e1)
+    e2 = np.cross(o, e1)  # e1 x e2 = o: growing angle turns CCW
+
+    def ray(theta):
+        p = o + 0.01 * (np.cos(theta) * e1 + np.sin(theta) * e2)
+        return p / np.linalg.norm(p)
+
+    def inside(theta, start, end):  # open CCW arc start -> end
+        tau = 2 * np.pi
+        return 0 < (theta - start) % tau < (end - start) % tau
+
+    rng = np.random.default_rng(170)
+    seen = set()
+    for _ in range(400):
+        a0, a2, b0, b2 = rng.uniform(0, 2 * np.pi, 4)
+        want = inside(b2, a2, a0) or inside(a2, b2, b0)
+        got = wedge_intersects(ray(a0), o, ray(a2), ray(b0), ray(b2))
+        assert got == want, (a0, a2, b0, b2)
+        seen.add(want)
+    assert seen == {True, False}

@@ -168,21 +168,9 @@ def test_auto_salt_layer(spark, points_df, layer):
     assert salted.covering_rows > layer.covering_rows
 
 
-def _as_distributed(layer):
-    from geo_spark.operators.spatial_join import Layer
-
-    return Layer(
-        layer.geoms,
-        layer.covering,
-        layer.levels,
-        None,
-        covering_rows=layer.covering_rows,
-        n_geoms=layer.n_geoms,
-        radius_rad=layer.radius_rad,
-    )
-
-
-def test_refine_fallback_matches_closure_and_is_deskewed(spark, points_df):
+def test_refine_fallback_matches_closure_and_is_deskewed(
+    spark, points_df, as_distributed
+):
     """The huge-layer refine fallback on a SKEWED fixture (one
     near-global cap holds ~every candidate): results equal the closure
     path, and the plan has no per-geometry keyed group — previously a
@@ -198,7 +186,7 @@ def test_refine_fallback_matches_closure_and_is_deskewed(spark, points_df):
         (2, Cap.from_center_angle(48.85, 2.35, 0.01)),
     ]
     layer = build_layer(spark, regions, max_cells=8, interior=False)
-    forced = _as_distributed(layer)
+    forced = as_distributed(layer)
 
     closure = {
         (r["pid"], r["geom_id"])
@@ -216,3 +204,33 @@ def test_refine_fallback_matches_closure_and_is_deskewed(spark, points_df):
     assert "hashpartitioning(geom_id" not in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
+
+
+def test_plan_build_fires_no_job_once_layer_is_known(spark, points_df, as_distributed):
+    """The coarse prefilter's key set is a fact of the layer, not of a
+    join: a driver-built layer plans spatial_join without any Spark job,
+    and a layer that does not know the key set yet computes it on its
+    first join only — the second join's plan fires no job."""
+    import time
+
+    df, _, _ = points_df
+    sc = spark.sparkContext
+
+    def plan_jobs(tag, layer, settle=0.0):
+        sc.setJobGroup(tag, tag)
+        try:
+            spatial_join(df, layer, point_key="pid", latlng=("lat", "lng"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.time() + settle
+        while True:  # job-start events reach the tracker asynchronously
+            ids = list(sc.statusTracker().getJobIdsForGroup(tag))
+            if ids or time.time() >= deadline:
+                return ids
+            time.sleep(0.2)
+
+    built = build_layer(spark, _regions(), max_cells=8)
+    assert plan_jobs("sj-driver-layer", built) == []
+    fresh = as_distributed(built)
+    assert plan_jobs("sj-first-join", fresh, settle=10.0)
+    assert plan_jobs("sj-second-join", fresh) == []

@@ -138,3 +138,13 @@ def test_out_of_order_raises(spark, tmp_path):
     )
     with pytest.raises(Exception, match="high-water|Stream"):
         _drain(spark, tmp_path, [fx.iloc[:4], late])
+
+
+def test_duplicate_ts_without_tiebreak_raises(spark, tmp_path):
+    """With no tiebreak_col, per-user ts uniqueness is the operator's
+    contract: a duplicate ts inside a batch raises instead of linking
+    in an order the batch operator would not use."""
+    fx = _fixes()
+    fx.loc[1, "ts_us"] = fx.loc[0, "ts_us"]
+    with pytest.raises(Exception, match="duplicate ts|Stream"):
+        _drain(spark, tmp_path, [fx])

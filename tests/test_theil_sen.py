@@ -355,6 +355,22 @@ def test_changepoint_randomized_differential(spark):
     assert sorted(got.values()) == wants
 
 
+def test_changepoint_total_with_negative_values(spark):
+    """changepoint_from_daily is a generic finisher over any
+    (qk, day, cnt) series: with a negative value the running prefix
+    peaks before the last day, so the total must be the series sum,
+    not the prefix maximum."""
+    from geo_spark.operators.tiling import changepoint_from_daily
+
+    days = {0: 5, 1: 6, 2: -4, 3: 2}  # prefixes 5, 11, 7, 9
+    daily = spark.createDataFrame(
+        [(1, d, c) for d, c in days.items()], "qk long, day long, cnt long"
+    )
+    [r] = changepoint_from_daily(daily).collect()
+    assert r["total"] == 9
+    assert (r["n_days"], r["total"], r["cp_day"], r["cp_stat"]) == _ref_cp(days)
+
+
 def test_changepoint_plan_is_native_no_join(spark):
     from geo_spark.operators.tiling import tile_changepoint
 
