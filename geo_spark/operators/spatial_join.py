@@ -19,12 +19,15 @@ Scale design (the part the reference, being single-node, doesn't have):
   children (``split_hot_cells``) — a *semantic* salt: the children are
   still valid covering cells, so results are invariant to the split
   while the join keys fan out;
-- one refine path (``_refine_by_region``) for every covering-join
-  operator: dimension-table layers ship their regions in the task
-  closure, huge layers attach the geometry blobs by an equi-join; each
-  Arrow batch runs one vectorized predicate per geometry present
-  (``mapInPandas``).  Never per-row Python, never a per-geometry keyed
-  group.
+- one pass over the candidates: interior and boundary candidate rows
+  reach the one refine path (``_refine_by_region``) together, so the
+  point side (scan, extract, explode, join) is planned once; the kernel
+  keeps interior rows untested and runs the exact predicate on the
+  rest.  Dimension-table layers ship their regions in the task
+  closure, huge layers attach the geometry blobs by an equi-join that
+  leaves interior rows without a blob; each Arrow batch runs one
+  vectorized predicate per geometry present (``mapInPandas``).  Never
+  per-row Python, never a per-geometry keyed group.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -279,7 +282,6 @@ def split_hot_cells(
     ``hot_cell_histogram``)."""
     if not hot_cells:
         return layer
-    spark = layer.covering.sparkSession
     hot = {int(c) for c in hot_cells}
 
     s = split_levels
@@ -306,13 +308,23 @@ def split_hot_cells(
         )
         .withColumn("level", s2sql.level(F.col("cell")).cast("int"))
     )
-    levels = [r["level"] for r in cov.select("level").distinct().collect()]
+    # The level set is derived, not collected: a split cell at level lv
+    # adds lv + s.  It may be a superset (a level whose every cell was
+    # split keeps its explode key, which then matches no covering row);
+    # hot cells at no covering level are not covering cells and split
+    # nothing, so ``levels[0]`` stays.
+    hot_levels = ck.level(ck.from_signed(np.array(sorted(hot), dtype=np.int64)))
+    levels = set(layer.levels) | {
+        int(lv) + s
+        for lv in hot_levels
+        if int(lv) in layer.levels and lv + s <= 30
+    }
     est = (
         layer.covering_rows * (4**split_levels)
         if layer.covering_rows is not None
         else None
     )
-    return Layer(
+    salted = Layer(
         layer.geoms,
         cov,
         sorted(levels),
@@ -321,6 +333,10 @@ def split_hot_cells(
         n_geoms=layer.n_geoms,
         radius_rad=layer.radius_rad,
     )
+    if layer.levels:
+        # Split children share their parent's ancestor at levels[0].
+        salted.prefilter_cells = layer.prefilter_cells
+    return salted
 
 
 def hot_cell_histogram(
@@ -328,15 +344,26 @@ def hot_cell_histogram(
 ) -> list[tuple[int, int]]:
     """(covering_cell, point_count) for the heaviest covering cells —
     the skew diagnostic that feeds split_hot_cells."""
+    return _cell_loads(points, layer, cell_col, top)[0]
+
+
+def _cell_loads(
+    points: DataFrame, layer: Layer, cell_col: str, top: int
+) -> tuple[list[tuple[int, int]], int]:
+    """The ``top`` heaviest covering cells by candidate count, and the
+    total candidate count, from ONE aggregate over the candidate join
+    (one driver action)."""
     cand = _candidates(points.select(F.col(cell_col).alias("_pt_cell")), layer, "_pt_cell")
-    rows = (
-        cand.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"))
-        .limit(top)
-        .collect()
-    )
-    return [(r["cell"], r["cnt"]) for r in rows]
+    per_cell = cand.groupBy("cell").agg(F.count(F.lit(1)).alias("cnt"))
+    row = per_cell.agg(
+        F.sum("cnt").alias("total"),
+        F.slice(
+            F.sort_array(F.collect_list(F.struct("cnt", "cell")), asc=False),
+            1,
+            top,
+        ).alias("top"),
+    ).collect()[0]
+    return [(r["cell"], r["cnt"]) for r in row["top"]], row["total"] or 0
 
 
 def _coarse_prefilter(points: DataFrame, layer: Layer, cell_col: str) -> DataFrame:
@@ -454,6 +481,7 @@ def _refine_by_region(
     kernel,
     schema: str,
     id_col: str = "geom_id",
+    needs_region: Column | None = None,
 ) -> DataFrame:
     """The covering join's one refine path: how a layer's geometries
     reach the candidate rows.
@@ -468,13 +496,20 @@ def _refine_by_region(
     shuffle join whose skewed partitions AQE splits — and unpickle each
     region once per task.  Either way the grouping is batch-local, never
     a per-geometry keyed group, so one dense geometry never pins one
-    task."""
+    task.
+
+    ``needs_region`` marks the rows the kernel tests; on the blob tier
+    the others keep a null blob (the JVM drops it before the Arrow hop)
+    and an id that no row of the batch needs gets ``None`` in ``regs``."""
     regions = layer.regions
     if regions is None:
-        geoms = layer.geoms.withColumnRenamed("geom_id", id_col)
+        geoms = layer.geoms.withColumnRenamed("geom_id", "_blob_id")
         if layer.n_geoms is not None and layer.n_geoms <= BROADCAST_MAX_GEOM_ROWS:
             geoms = F.broadcast(geoms)
-        cand = cand.join(geoms, id_col)
+        on = F.col(id_col) == F.col("_blob_id")
+        if needs_region is not None:
+            on = on & needs_region
+        cand = cand.join(geoms, on, "left").drop("_blob_id")
 
     def fn(batches):
         cache: dict = {}
@@ -482,17 +517,16 @@ def _refine_by_region(
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy(np.int64)
-            uniq, first, inv = np.unique(
-                ids, return_index=True, return_inverse=True
-            )
+            uniq, inv = np.unique(ids, return_inverse=True)
             if regions is not None:
                 regs = [regions[int(g)] for g in uniq]
             else:
                 blobs = pdf["blob"]
-                regs = [
-                    _cached_region(cache, int(g), blobs.iloc[int(i)])
-                    for g, i in zip(uniq, first)
-                ]
+                has = np.flatnonzero(blobs.notna().to_numpy())
+                ks, at = np.unique(inv[has], return_index=True)
+                regs = [None] * len(uniq)
+                for k, i in zip(ks, has[at]):
+                    regs[k] = _cached_region(cache, int(uniq[k]), blobs.iloc[int(i)])
             yield kernel(pdf, inv, regs)
 
     return cand.mapInPandas(fn, schema)
@@ -521,27 +555,31 @@ def spatial_join(
     if latlng:
         cols += list(latlng)
     pts = points.select(*dict.fromkeys(cols))
-    cand = _candidates(pts, layer, cell_col)
-
     # Covering cells of one geometry are *disjoint* (normalized,
     # s2/cellunion.go:27-34), so a point's leaf lies in at most one of
     # them: (point, geom) candidate rows are already unique — no dedup
-    # shuffle needed.
-    sure = cand.where(F.col("is_interior")).select(point_key, "geom_id", *carry)
-    unsure = cand.where(~F.col("is_interior"))
+    # shuffle needed.  Interior and boundary candidates take the same
+    # pass, so the point side is planned once.
+    need = [point_key, *carry, *(latlng or (cell_col,)), "geom_id", "is_interior"]
+    cand = _candidates(pts, layer, cell_col).select(*dict.fromkeys(need))
 
-    key_type = unsure.schema[point_key].dataType.simpleString()
+    key_type = cand.schema[point_key].dataType.simpleString()
     schema = ", ".join(
         ["geom_id long", f"{point_key} {key_type}"]
-        + [f"{c} {unsure.schema[c].dataType.simpleString()}" for c in carry]
+        + [f"{c} {cand.schema[c].dataType.simpleString()}" for c in carry]
     )
 
     def contains(pdf, inv, regs):
-        pts = _points_xyz(pdf, cell_col, latlng)
-        keep = np.zeros(len(pdf), dtype=bool)
-        for i, region in enumerate(regs):
-            m = inv == i
-            keep[m] = region.contains_points(pts[m])
+        # Interior rows are kept untested; only boundary rows run the
+        # exact predicate, one vectorized call per geometry present.
+        keep = pdf["is_interior"].to_numpy(dtype=bool, copy=True)
+        test = np.flatnonzero(~keep)
+        if len(test):
+            pts = _points_xyz(pdf, cell_col, latlng, test)
+            tinv = inv[test]
+            for i in np.unique(tinv):
+                m = tinv == i
+                keep[test[m]] = regs[i].contains_points(pts[m])
         out = {
             "geom_id": pdf["geom_id"].to_numpy(np.int64)[keep],
             point_key: pdf[point_key].to_numpy()[keep],
@@ -550,7 +588,9 @@ def spatial_join(
             out[c] = pdf[c].to_numpy()[keep]
         return pd.DataFrame(out)
 
-    matches = sure.unionByName(_refine_by_region(unsure, layer, contains, schema))
+    matches = _refine_by_region(
+        cand, layer, contains, schema, needs_region=~F.col("is_interior")
+    )
 
     if how == "inner":
         return matches
@@ -560,14 +600,16 @@ def spatial_join(
     raise ValueError(f"unsupported how={how!r}")
 
 
-def _points_xyz(pdf: pd.DataFrame, cell_col: str, latlng) -> np.ndarray:
+def _points_xyz(
+    pdf: pd.DataFrame, cell_col: str, latlng, rows: np.ndarray
+) -> np.ndarray:
     if latlng:
         x, y, z = ck.latlng_to_xyz(
-            pdf[latlng[0]].to_numpy(np.float64),
-            pdf[latlng[1]].to_numpy(np.float64),
+            pdf[latlng[0]].to_numpy(np.float64)[rows],
+            pdf[latlng[1]].to_numpy(np.float64)[rows],
         )
         return np.stack([x, y, z], axis=1)
-    cells = ck.from_signed(pdf[cell_col].to_numpy(np.int64))
+    cells = ck.from_signed(pdf[cell_col].to_numpy(np.int64)[rows])
     x, y, z = ck.cellid_to_xyz(cells)
     pts = np.stack([x, y, z], axis=1)
     return pts / np.sqrt((pts * pts).sum(axis=1))[:, None]
@@ -589,19 +631,14 @@ def auto_salt_layer(
 
     Join output is provably invariant (split_hot_cells: children cover
     exactly the parent's leaves); only the shuffle key-space fans out.
-    Cost: one aggregate over the candidate join (the same join the
-    query runs anyway — at production scale run it on a sample or reuse
-    a previous run's histogram; both Compose, since the salting is
-    correctness-neutral)."""
-    hist = hot_cell_histogram(points, layer, cell_col=cell_col, top=top)
+    Cost: one aggregate over the candidate join, one driver action (the
+    same join the query runs anyway — at production scale run it on a
+    sample or reuse a previous run's histogram; both Compose, since the
+    salting is correctness-neutral); the salted layer's levels and
+    prefilter keys are derived on the driver."""
+    hist, total = _cell_loads(points, layer, cell_col, top)
     if not hist or not layer.covering_rows:
         return layer, []
-    total = (
-        _candidates(
-            points.select(F.col(cell_col).alias("_pt_cell")), layer, "_pt_cell"
-        )
-        .count()
-    )
     mean_load = max(total / max(layer.covering_rows, 1), 1.0)
     hot = [c for c, cnt in hist if cnt > skew_ratio * mean_load]
     if not hot:

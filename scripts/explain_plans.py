@@ -23,7 +23,9 @@ NOTES = {
 - Covering side is a `LocalTableScan` (materialized literal covering) feeding a
   `BroadcastExchange` — no recompute, no shuffle of the points side.
 - The per-level keys are literal bit-masks inside codegen (no UDF before the join).
-- Single `MapInPandas` for the refine, after the join filtered candidates.""",
+- The points side is planned once: ONE events `Scan parquet` and ONE
+  `MapInPandas` (the refine, after the join filtered candidates; interior
+  candidates pass it untested), no `Union`.""",
     "knn_cities": """Properties to check:
 - No join or shuffle at all: targets ship in the closure; the plan is
   scan -> one MapInPandas -> (optional sort).  This is the

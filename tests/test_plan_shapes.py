@@ -83,6 +83,30 @@ def test_tile_pipeline_single_python_stage(spark, tmp_path):
     assert "HashAggregate" in plan
 
 
+def test_pages_join_single_point_pass(spark, tmp_path, as_distributed):
+    """spatial_join refines interior and boundary candidates in one
+    pass: the point side (scan, extract, explode, join) is planned
+    once, on both refine tiers — one parquet scan, one extract hop, one
+    refine hop, no Union."""
+    from geo_spark.operators.spatial_join import build_layer, spatial_join
+    from geo_spark.sources.extract import extract_encode
+    from geo_spark.sources.layers import city_loop_regions
+    from geo_spark.sources.pages import synth_pages
+
+    src = str(tmp_path / "pages_join_plan")
+    synth_pages(spark, 500, partitions=2).write.parquet(src)
+    layer = build_layer(spark, city_loop_regions(10), max_cells=8)
+    for lay in (layer, as_distributed(layer)):
+        enc = extract_encode(spark.read.parquet(src), keep=("url",))
+        plan = _plan_of(
+            spatial_join(enc, lay, point_key="url", latlng=("lat", "lng"))
+        )
+        assert plan.count("Scan parquet") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Union" not in plan, plan
+
+
 def test_knn_brute_plan_is_pure_map(spark):
     from geo_spark.operators.knn import _knn_brute
 

@@ -144,20 +144,53 @@ def test_interior_cells_skip_refine(spark, layer):
         assert region.contains_cell(Cell.from_id(u))
 
 
+def _jobs_of(sc, tag: str, call, settle: float = 10.0):
+    """``call()``'s result and the ids of the Spark jobs it fired,
+    counted through a job group.  Job-start events reach the tracker
+    asynchronously: wait up to ``settle`` seconds for a non-empty id
+    list to hold still."""
+    import time
+
+    sc.setJobGroup(tag, tag)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    seen, deadline = None, time.time() + settle
+    while True:
+        ids = sorted(sc.statusTracker().getJobIdsForGroup(tag))
+        if (ids and ids == seen) or time.time() >= deadline:
+            return out, ids
+        seen = ids
+        time.sleep(0.5)
+
+
 def test_auto_salt_layer(spark, points_df, layer):
     """Adaptive salting: the clustered point pile triggers splits of
-    overloaded covering cells and the join result is unchanged."""
+    overloaded covering cells and the join result is unchanged.  The
+    measurement is ONE driver action: auto_salt_layer fires no more
+    Spark jobs than the histogram alone (the total comes from the same
+    aggregate; the salted levels and prefilter keys are derived)."""
     from geo_spark.operators.spatial_join import auto_salt_layer
 
     df, lat, lng = points_df
+    sc = spark.sparkContext
     before = {
         (r["pid"], r["geom_id"])
         for r in spatial_join(
             df, layer, point_key="pid", latlng=("lat", "lng")
         ).collect()
     }
-    salted, hot = auto_salt_layer(df, layer, skew_ratio=4.0)
+    _, hist_jobs = _jobs_of(
+        sc, "salt-hist", lambda: hot_cell_histogram(df, layer, top=20)
+    )
+    (salted, hot), salt_jobs = _jobs_of(
+        sc, "salt-auto", lambda: auto_salt_layer(df, layer, skew_ratio=4.0)
+    )
     assert hot, "clustered pile must trigger splits"
+    assert hist_jobs and len(salt_jobs) == len(hist_jobs)
+    assert salted.levels[0] == layer.levels[0]
+    assert salted.prefilter_cells == layer.prefilter_cells
     after = {
         (r["pid"], r["geom_id"])
         for r in spatial_join(
@@ -166,6 +199,10 @@ def test_auto_salt_layer(spark, points_df, layer):
     }
     assert after == before
     assert salted.covering_rows > layer.covering_rows
+    # Derived levels: a superset of the levels the salted covering has.
+    assert set(salted.levels) >= {
+        r["level"] for r in salted.covering.select("level").distinct().collect()
+    }
 
 
 def test_refine_fallback_matches_closure_and_is_deskewed(
@@ -211,26 +248,79 @@ def test_plan_build_fires_no_job_once_layer_is_known(spark, points_df, as_distri
     join: a driver-built layer plans spatial_join without any Spark job,
     and a layer that does not know the key set yet computes it on its
     first join only — the second join's plan fires no job."""
-    import time
-
     df, _, _ = points_df
     sc = spark.sparkContext
 
     def plan_jobs(tag, layer, settle=0.0):
-        sc.setJobGroup(tag, tag)
-        try:
-            spatial_join(df, layer, point_key="pid", latlng=("lat", "lng"))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        deadline = time.time() + settle
-        while True:  # job-start events reach the tracker asynchronously
-            ids = list(sc.statusTracker().getJobIdsForGroup(tag))
-            if ids or time.time() >= deadline:
-                return ids
-            time.sleep(0.2)
+        return _jobs_of(
+            sc,
+            tag,
+            lambda: spatial_join(df, layer, point_key="pid", latlng=("lat", "lng")),
+            settle,
+        )[1]
 
     built = build_layer(spark, _regions(), max_cells=8)
     assert plan_jobs("sj-driver-layer", built) == []
     fresh = as_distributed(built)
     assert plan_jobs("sj-first-join", fresh, settle=10.0)
     assert plan_jobs("sj-second-join", fresh) == []
+
+
+def test_blob_tier_interior_rows_carry_no_blob(spark, points_df, as_distributed):
+    """Blob tier on an ``interior=True`` layer: the one-pass refine
+    equals the closure tier, and interior candidate rows cross the
+    Arrow hop without a geometry blob (only boundary rows get one, and
+    only their ids get a region)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from geo_spark.operators.spatial_join import _candidates, _refine_by_region
+
+    df, lat, lng = points_df
+    layer = build_layer(spark, _regions(), max_cells=8)
+    forced = as_distributed(layer)
+
+    def pairs(lay):
+        return {
+            (r["pid"], r["geom_id"])
+            for r in spatial_join(
+                df, lay, point_key="pid", latlng=("lat", "lng")
+            ).collect()
+        }
+
+    assert pairs(forced) == pairs(layer) == _brute(lat, lng)
+
+    # What the refine node receives on this layer, row by row.
+    def spy(pdf, inv, regs):
+        return pd.DataFrame(
+            {
+                "interior": pdf["is_interior"].to_numpy(bool),
+                "has_blob": pdf["blob"].notna().to_numpy(),
+                "has_region": np.array([regs[i] is not None for i in inv]),
+            }
+        )
+
+    cand = _candidates(df.select("pid", "cell_id"), forced, "cell_id")
+    seen = _refine_by_region(
+        cand,
+        forced,
+        spy,
+        "interior boolean, has_blob boolean, has_region boolean",
+        needs_region=~F.col("is_interior"),
+    ).collect()
+    interior = [r for r in seen if r["interior"]]
+    boundary = [r for r in seen if not r["interior"]]
+    assert interior and boundary, "fixture must yield both kinds of rows"
+    assert not any(r["has_blob"] for r in interior)
+    assert all(r["has_blob"] and r["has_region"] for r in boundary)
+
+    # spatial_join itself asks the refine path for exactly that: the
+    # blob join keeps every candidate and attaches blobs to boundary
+    # rows only.
+    plan = (
+        spatial_join(df, forced, point_key="pid", latlng=("lat", "lng"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "LeftOuter" in plan and "NOT is_interior" in plan, plan
